@@ -90,7 +90,7 @@ def entry(spark: SparkSession) -> DataFrame:
     mapInPandas engine -> per-doc spans/status)."""
     docs = _docs(spark, "/root/testdata/sf0.001")
     spans = with_synthetic_giants(docs, every=200, repeat=60)
-    out = run_extract_skewed(spans, skew_threshold=2000)
+    out = run_extract_skewed(spans)
     return out.select("doc_id", "n_spans", "n_chars", "status",
                       F.col("spans").getItem(0).getField("kind").alias("first_kind"))
 
@@ -952,7 +952,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def extract_skew_giants(spark, sf_dir):
         spans = with_synthetic_giants(_docs(spark, sf_dir), every=200,
                                       repeat=40)
-        return run_extract_skewed(spans, skew_threshold=2000).select(
+        return run_extract_skewed(spans).select(
             "doc_id", "n_spans", "n_chars", "status")
     q["extract_skew_giants"] = extract_skew_giants
 

@@ -289,7 +289,7 @@ def run_extraction_bench(spark, sf_dir: str) -> tuple[float, int]:
     best = float("inf")
     for _ in range(2):
         t0 = time.time()
-        out = run_extract_skewed(spans, skew_threshold=2000)
+        out = run_extract_skewed(spans)
         # a real action that touches every span array but returns scalars
         out.selectExpr("sum(n_spans)", "sum(n_chars)", "count(*)").collect()
         best = min(best, time.time() - t0)

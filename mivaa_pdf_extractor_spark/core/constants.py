@@ -142,9 +142,11 @@ TABLE_MIN_COLS = 2
 # per pdf_processor.py:1184-1238)
 MIN_EFFECTIVE_DPI = 100
 
-# skew handling: docs with more input spans than this take the per-page
-# salted path (SURVEY.md §7.2 step 8)
-DEFAULT_SKEW_THRESHOLD = 2000
+# the one size rule for giant documents (SURVEY.md §7.2 step 8): a doc with
+# more input spans than this takes the salted path, cut into
+# ceil(n_spans / threshold) page buckets — so every salted doc spans at
+# least two buckets, and every doc at or under it is one kernel row
+DEFAULT_SKEW_THRESHOLD = 8192
 
 # deterministic media_ref patterns — model the reference filename patterns
 # page_{p}_image_{i}.{ext} (pdf_processor.py:1023), page_{p}_region_{i}.jpg

@@ -646,23 +646,27 @@ def _reassemble_arrow(flat: pd.DataFrame, docs: pd.DataFrame,
 # docs per processing chunk: the kernel runs ~60 vectorized ops per chunk,
 # so Spark's default 256-record Arrow batches pay that fixed cost every
 # ~2k spans (measured 2.5x slowdown); accumulate to amortize. Gains plateau
-# by ~2k docs; 4k of even large (skew-threshold-sized) docs stays <~1 GB.
+# by ~2k docs. Docs up to the skew threshold reach this kernel, so a chunk
+# also flushes at a span budget: 4k docs of 2k spans stays <~1 GB (plus at
+# most one incoming Arrow batch).
 _CHUNK_DOCS = 4096
+_CHUNK_SPANS = _CHUNK_DOCS * 2000
 
 
 def _coalesce_batches(
         batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
     pending: list[pa.RecordBatch] = []
-    n = 0
+    n = spans = 0
     for b in batches:
         if b.num_rows == 0:
             continue
         pending.append(b)
         n += b.num_rows
-        if n >= _CHUNK_DOCS:
+        spans += len(b.column("spans").flatten())
+        if n >= _CHUNK_DOCS or spans >= _CHUNK_SPANS:
             yield pa.Table.from_batches(pending).combine_chunks().to_batches(
                 max_chunksize=n)[0]
-            pending, n = [], 0
+            pending, n, spans = [], 0, 0
     if pending:
         yield pa.Table.from_batches(pending).combine_chunks().to_batches(
             max_chunksize=n)[0]

@@ -3,33 +3,34 @@
 The reference has no skew handling (SURVEY.md §4 — one 200-page catalog just
 takes longer); the north rule requires it explicitly. Strategy:
 
-- documents with ``size(spans) <= threshold`` take the normal whole-doc
-  ``mapInPandas`` path (operators/extract.py);
-- giant documents are **salted by page bucket**: ``posexplode`` → the
-  doc-global context (heading histogram M1, per-layer media dedup I5) is
-  computed with *native* window/groupBy expressions → per
-  ``(doc_id, page % ceil(n_spans/spans_per_bucket))`` bucket groups are
-  processed by
-  ``applyInPandas`` reusing the same ``process_flat`` kernel (one kernel
-  invocation covers ~spans_per_bucket spans, so the per-group pandas
-  overhead amortizes) → per-page rows are reassembled **natively** with a window
-  cumsum for char offsets and ``array_sort``+``flatten`` for ordered span
-  concatenation (SURVEY.md §7.2 step 8's "one subtle shuffle").
+One size rule, ``threshold`` (``C.DEFAULT_SKEW_THRESHOLD`` by default),
+decides who is salted and how finely:
+
+- documents with ``size(spans) <= threshold`` fit one bucket and take the
+  whole-doc ``mapInArrow`` kernel (operators/extract.py);
+- larger ones are **salted** into ``ceil(n_spans / threshold)`` page
+  buckets (at least two): ``posexplode`` → doc-global context (heading
+  histogram M1, media dedup I5, sheet geometry) from *native* window/groupBy
+  expressions → ``(doc_id, page % n_buckets)`` groups run the same
+  ``process_flat`` kernel via ``applyInPandas`` → **native** reassembly
+  (window cumsum for char offsets, ``array_sort`` for span order; SURVEY.md
+  §7.2 step 8's "one subtle shuffle"). ``threshold=0`` salts every
+  document one page per bucket.
 
 At cluster scale this bounds task size by page bucket, not by document: one
-10^6-span document spreads across ~n/spans_per_bucket tasks, and no task
+10^6-span document spreads across ~n/threshold tasks, and no task
 materializes the whole document until the final (columnar, JVM-side)
 concatenation.
 
-The giant subset is deliberately NOT persisted before fan-out: the
-downstream subplans (failure scan, media-dedup window, heading histogram,
-page buckets) re-derive the explode from the columnar source scan, which
-benchmarks ~2x faster end-to-end than an InMemoryRelation at high
-parallelism (cache build + block-manager contention + GC outweigh three
-codegen'd re-scans).
+The giant document rows are persisted (the size filter is not pushable);
+``salted_extraction`` releases that cache after the caller's write,
+``run_extract_skewed`` leaves it to the session.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -57,8 +58,6 @@ _ROW_SCHEMA = T.StructType([
 # round 1 had unsigned `[0-9.]+` here, which read `edpi=-1` as 1 and flipped
 # the low-DPI gate only on the skew path.
 _PAGE_RE = attr_regex("page", INT_ATTR_PATTERN)
-
-DEFAULT_SPANS_PER_BUCKET = 8192
 
 
 def _extract_page_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -124,9 +123,10 @@ def _extract_page_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def _extract_giant(giant: DataFrame,
-                   spans_per_bucket: int = DEFAULT_SPANS_PER_BUCKET,
-                   ) -> DataFrame:
-    """Per-page-bucket salted extraction of documents above the threshold.
+                   threshold: int) -> tuple[DataFrame, DataFrame]:
+    """Per-page-bucket salted extraction of documents above ``threshold``.
+    Returns the plan and the persisted giant subset it reads, which the
+    caller releases once the plan has been consumed.
 
     Stage-lean plan (each line after the explode is one shuffle at most):
       explode -> [doc-level failure scan (tiny agg)]
@@ -284,14 +284,10 @@ def _extract_giant(giant: DataFrame,
     # ship the kernel only what it consumes: doc-global heading context is a
     # compact string (a per-row list<struct> duplicate is pure Arrow bloat),
     # and base/page_hint are re-derived by the kernel's own attr parse.
-    # Salt count ADAPTS to document size (~spans_per_bucket spans per
-    # bucket): a fixed salt count either shreds medium giants into
-    # thousands of tiny applyInPandas groups (per-group pandas overhead
-    # dominates) or under-splits the truly huge ones. A 10^6-span document
-    # still spreads across ~n/spans_per_bucket tasks, so task size stays
-    # bounded by bucket, not by document.
-    n_salts_doc = F.greatest(
-        F.ceil(F.col("n_doc_spans") / F.lit(spans_per_bucket)), F.lit(1))
+    # Salt count ADAPTS to document size (~threshold spans per bucket): a
+    # fixed salt count either shreds medium giants into tiny applyInPandas
+    # groups or under-splits the truly huge ones.
+    n_salts_doc = F.ceil(F.col("n_doc_spans") / F.lit(max(threshold, 1)))
     with_ctx = deduped.join(F.broadcast(headings), "doc_id", "left")
     if has_sheets:
         with_ctx = with_ctx.join(F.broadcast(sheet_dims),
@@ -381,17 +377,12 @@ def _extract_giant(giant: DataFrame,
                      C.STATUS_NO_TEXT)
                .otherwise(C.STATUS_COMPLETED_EMPTY).alias("status"),
            ))
-    return out
+    return out, giant
 
 
-def run_extract_skewed(
-    df: DataFrame,
-    skew_threshold: int = C.DEFAULT_SKEW_THRESHOLD,
-    num_partitions: int | None = None,
-    spans_per_bucket: int = DEFAULT_SPANS_PER_BUCKET,
-) -> DataFrame:
-    """Full extraction plan with skew salting: normal docs whole-doc, giant
-    docs per-page-bucket, one unioned output."""
+def _extract_split(df: DataFrame, skew_threshold: int,
+                   num_partitions: int | None,
+                   ) -> tuple[DataFrame, DataFrame]:
     n = F.size("spans")  # -1 for NULL arrays -> normal path handles them
     normal = df.filter((n <= skew_threshold))
     giant = df.filter(n > skew_threshold)
@@ -401,6 +392,31 @@ def run_extract_skewed(
         # bytes-proportional sizing shared with run_extract
         from .extract import auto_partition_target
         num_partitions = auto_partition_target(df) or None
+    giant_out, cached = _extract_giant(giant, skew_threshold)
     return run_extract(normal, num_partitions,
-                       auto_repartition=False).unionByName(
-        _extract_giant(giant, spans_per_bucket))
+                       auto_repartition=False).unionByName(giant_out), cached
+
+
+def run_extract_skewed(
+    df: DataFrame,
+    skew_threshold: int = C.DEFAULT_SKEW_THRESHOLD,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Full extraction plan with skew salting: normal docs whole-doc, giant
+    docs per-page-bucket, one unioned output. The giant subset stays cached
+    in the session; use ``salted_extraction`` to release it."""
+    return _extract_split(df, skew_threshold, num_partitions)[0]
+
+
+@contextmanager
+def salted_extraction(df: DataFrame, num_partitions: int | None = None,
+                      ) -> Iterator[DataFrame]:
+    """``run_extract_skewed`` at the default threshold, scoped to a block
+    that consumes the plan (e.g. writes it): the cached giant subset is
+    released when the block exits."""
+    out, cached = _extract_split(df, C.DEFAULT_SKEW_THRESHOLD,
+                                 num_partitions)
+    try:
+        yield out
+    finally:
+        cached.unpersist()

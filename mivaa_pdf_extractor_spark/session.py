@@ -24,16 +24,13 @@ def _available_gb() -> int:
     return 0
 
 
-def _default_driver_mem() -> tuple[str, bool]:
+def _default_driver_mem() -> str:
     """Heap default derived from available memory (half of MemAvailable,
-    clamped to [4g, 24g]); pre-touching (-Xms=heap) only when there is
-    >=1.5x the heap available so the fixed heap cannot thrash smaller
-    hosts. Override with SPARK_GRAFT_DRIVER_MEM."""
+    clamped to [4g, 24g]). Override with SPARK_GRAFT_DRIVER_MEM."""
     avail = _available_gb()
     if avail <= 0:
-        return "8g", False
-    heap = max(4, min(24, avail // 2))
-    return f"{heap}g", avail >= heap * 1.5
+        return "8g"
+    return f"{max(4, min(24, avail // 2))}g"
 
 
 def _default_local_dir() -> str:
@@ -56,11 +53,8 @@ def build_session(
 ) -> SparkSession:
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or \
         f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
-    env_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
-    if env_mem:
-        driver_mem, pre_touch = env_mem, True
-    else:
-        driver_mem, pre_touch = _default_driver_mem()
+    pinned_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    driver_mem = pinned_mem or _default_driver_mem()
     cores = os.cpu_count() or 8
     if shuffle_partitions is None:
         # match task slots at local scale; on a real cluster override to
@@ -99,13 +93,15 @@ def build_session(
         .config("spark.driver.memory", driver_mem)
         # fixed, pre-touched heap: G1's commit/uncommit cycling under a
         # high allocation rate shows up as 20-60% SYSTEM time at 32 task
-        # threads (page-fault + munmap TLB-shootdown storms, measured on
-        # this box: wall 31s -> 15s at local[32]). Applied only when the
-        # host has the headroom (see _default_driver_mem); same flags apply
-        # to executor JVMs on a real cluster via executor.extraJavaOptions.
+        # threads (page-fault + munmap TLB-shootdown storms: wall 31s ->
+        # 15s at local[32]). Only for a heap pinned via
+        # SPARK_GRAFT_DRIVER_MEM: a derived heap is half of what is free
+        # NOW, and pre-touching it lets a second driver started on the same
+        # host (e.g. a multi-process test) push the first into the OOM
+        # killer.
         .config("spark.driver.extraJavaOptions",
-                f"-Xms{driver_mem} -XX:+AlwaysPreTouch" if pre_touch
-                else "-XX:+AlwaysPreTouch")
+                f"-Xms{driver_mem} -XX:+AlwaysPreTouch" if pinned_mem
+                else "")
         # same fix for executor JVMs on a real cluster (no-op in local mode,
         # where the driver JVM is the executor)
         .config("spark.executor.extraJavaOptions", "-XX:+AlwaysPreTouch")

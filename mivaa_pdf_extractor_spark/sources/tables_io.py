@@ -620,7 +620,7 @@ class Catalog:
         # collect, anti-join build, union write) — persist it so an
         # expensive upstream plan (full extraction) runs once. Only
         # unpersist what THIS call persisted: a caller sharing one persisted
-        # frame across sinks (the streaming path) must not lose its cache
+        # frame across sinks must not lose its cache
         df_persisted = not df.is_cached
         if df_persisted:
             df = df.persist()

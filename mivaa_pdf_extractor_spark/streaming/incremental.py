@@ -17,11 +17,10 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from ..core import constants as C
-from ..operators.skew import run_extract_skewed
+from ..plans.chunk_pipeline import run_chunk_indexing
+from ..plans.pipeline import run_pipeline
 from ..sources.synthetic import INPUT_SCHEMA
 from ..sources.tables_io import Catalog
-from ..plans.pipeline import EXTRACTED_TABLE
 
 
 def run_incremental(
@@ -29,51 +28,30 @@ def run_incremental(
     source_path: str,
     catalog: Catalog,
     stream_checkpoint: str,
-    skew_threshold: int = C.DEFAULT_SKEW_THRESHOLD,
     index_chunks: bool = False,
     chunk_max_size: int = 1000,
 ) -> None:
     """Process all currently-available new document files, then stop.
 
-    With ``index_chunks`` the micro-batch also runs Stage-2 over exactly
-    the batch's documents and namespace-replaces their chunk rows — the
-    streaming twin of ``run_chunk_indexing``, incremental in the batch's
-    doc set (the chunks of untouched documents are never read or
-    rewritten thanks to the bucketed catalog)."""
+    Each micro-batch is one ``run_pipeline`` run with run id
+    ``stream-{batch_id}``: checkpoint anti-join, S1 size gate, the
+    ``extracted``/``lineage``/``checkpoints`` sinks and the circuit breaker
+    all apply exactly as in batch. With ``index_chunks`` the micro-batch
+    then chunk-indexes exactly the batch's documents through
+    ``run_chunk_indexing`` (the chunks of untouched documents are never
+    read or rewritten thanks to the bucketed catalog)."""
     stream = (
         spark.readStream.schema(INPUT_SCHEMA)
         .parquet(source_path)
     )
 
     def process_batch(batch_df, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-        extracted = (
-            run_extract_skewed(batch_df, skew_threshold)
-            .withColumn("run_id", F.lit(f"stream-{batch_id}"))
-            .withColumn("partition_id", F.spark_partition_id())
-            .withColumn("ts", F.current_timestamp())
-        )
+        run_pipeline(spark, batch_df, catalog, run_id=f"stream-{batch_id}")
         if index_chunks:
-            # both sinks consume the extraction output — run it once
-            extracted = extracted.persist()
-        try:
-            # upsert, not append: the batch pipeline keys `extracted` on
-            # doc_id (one row per doc, no read-side compaction) — the
-            # streaming sink must preserve that invariant, and
-            # re-deliveries of a doc replace rather than duplicate
-            catalog.upsert(extracted, EXTRACTED_TABLE, key="doc_id")
-            if index_chunks:
-                from ..plans.chunk_pipeline import CHUNKS_TABLE, build_chunks
-                chunks = build_chunks(extracted,
-                                      max_size=chunk_max_size)
-                # delete-set = the batch's docs, not the produced chunks:
-                # a doc re-delivered as failed/empty must shed stale rows
-                catalog.replace_namespace(
-                    chunks, CHUNKS_TABLE, key="doc_id",
-                    delete_keys=extracted.select("doc_id").distinct())
-        finally:
-            if index_chunks:
-                extracted.unpersist()
+            doc_ids = [r["doc_id"] for r in
+                       batch_df.select("doc_id").distinct().collect()]
+            run_chunk_indexing(spark, catalog, doc_ids=doc_ids,
+                               max_size=chunk_max_size)
 
     q = (
         stream.writeStream

@@ -90,7 +90,7 @@ def child(cpus: int, sf_dir: str) -> None:
         # caches its exploded input per run) so repeats don't accumulate
         spark.catalog.clearCache()
         t0 = time.time()
-        out = run_extract_skewed(spans, skew_threshold=2000)
+        out = run_extract_skewed(spans)
         out.selectExpr("sum(n_spans)", "sum(n_chars)", "count(*)").collect()
         walls.append(time.time() - t0)
     wall = min(walls)

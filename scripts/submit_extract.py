@@ -7,7 +7,7 @@ Cluster usage (the north rule's deployment shape):
         scripts/submit_extract.py \\
         --input  <path or Iceberg table of (doc_id, spans)> \\
         --warehouse <catalog warehouse path> \\
-        [--skew-threshold 2000] [--max-doc-mb 50] [--run-id r1] \\
+        [--max-doc-mb 50] [--run-id r1] \\
         [--no-count-input]
 
 Local smoke:
@@ -39,7 +39,6 @@ def main() -> int:
     ap.add_argument("--warehouse", required=True,
                     help="catalog warehouse dir for extracted/checkpoints/"
                          "lineage tables")
-    ap.add_argument("--skew-threshold", type=int, default=2000)
     ap.add_argument("--max-doc-mb", type=int, default=50)
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--num-partitions", type=int, default=None)
@@ -62,7 +61,6 @@ def main() -> int:
     result = run_pipeline(
         spark, docs, Catalog(spark, args.warehouse),
         run_id=args.run_id,
-        skew_threshold=args.skew_threshold,
         num_partitions=args.num_partitions,
         max_doc_bytes=args.max_doc_mb * 1024 * 1024,
         count_input=args.count_input,

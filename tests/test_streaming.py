@@ -32,6 +32,15 @@ def _write_files(spark, docs, path):
         .write.mode("append").parquet(path)
 
 
+def _assert_run_bookkeeping(catalog, doc_ids, run_ids):
+    """Each micro-batch is a pipeline run: one checkpoint row per delivered
+    document, and lineage rows under each batch's run id."""
+    cps = [r["doc_id"] for r in catalog.read("checkpoints").collect()]
+    assert sorted(cps) == sorted(doc_ids)
+    assert {r["run_id"] for r in
+            catalog.read("lineage").select("run_id").collect()} == run_ids
+
+
 def test_available_now_matches_batch_and_resumes(spark, dirs):
     docs1 = gen_corpus(40, seed=7)
     _write_files(spark, docs1, dirs["src"])
@@ -46,6 +55,8 @@ def test_available_now_matches_batch_and_resumes(spark, dirs):
     for d, row in want.items():
         assert [tuple(s) for s in got[d]["spans"]] == \
             [tuple(s) for s in row["spans"]], d
+    _assert_run_bookkeeping(catalog, [d["doc_id"] for d in docs1],
+                            {"stream-0"})
 
     # second batch of files: only the delta is processed (no duplicates of
     # batch 1 in the sink; all of batch 2 present)
@@ -57,6 +68,8 @@ def test_available_now_matches_batch_and_resumes(spark, dirs):
     out = catalog.read("extracted")
     assert out.count() == len(docs1) + len(docs2)
     assert out.select("doc_id").distinct().count() == len(docs1) + len(docs2)
+    _assert_run_bookkeeping(catalog, [d["doc_id"] for d in docs1 + docs2],
+                            {"stream-0", "stream-1"})
 
     # idempotence: nothing new -> nothing appended
     run_incremental(spark, dirs["src"], catalog, dirs["stream_cp"])
