@@ -170,11 +170,14 @@ def expand_chunk_hits(hits: DataFrame, chunks: DataFrame, *,
         x = track(x)
         # join the KEPT neighbours' texts back by chunk_id (few per
         # hit — their lengths sum to <= char_budget-ish counts, vs the
-        # full neighbour fan-out the old plan shuffled)
+        # full neighbour fan-out the old plan shuffled). Distinct: a hit
+        # repeated in ``hits`` would otherwise collect each of its kept
+        # neighbours once per copy
         kept_rows = (x.select(F.col("chunk_id").alias("_kcid"),
                               F.explode("_kept").alias("_k"))
                      .select("_kcid", F.col("_k.ro").alias("_kro"),
-                             F.col("_k.nid").alias("_knid")))
+                             F.col("_k.nid").alias("_knid"))
+                     .distinct())
         kparts = (kept_rows
                   .join(corpus.select("_nid", "_ntext"),
                         F.col("_knid") == F.col("_nid"), "inner")

@@ -2,20 +2,26 @@
 
 The round-4 verdict noted the fallback's atomicity claim was
 single-writer-tested only: without arbitration, two writers that both
-base a new manifest on the same parent lose whichever ``os.replace``
-lands first (its bucket additions vanish from the final manifest and
-its staged dirs get GC'd).  ``Catalog._table_lock`` now serializes the
-read-manifest -> stage -> swap critical section across processes via an
-``O_CREAT|O_EXCL`` lock file — the local equivalent of Iceberg's
-optimistic catalog commit.
+base a new manifest on the same parent lose whichever publish lands
+first (its bucket additions vanish from the final manifest and its
+staged dirs get GC'd). Every write now commits by compare-and-swap on
+the manifest version: ``os.link(tmp, _MANIFEST.v<N+1>)`` succeeds for
+exactly one writer, and the loser re-runs its operation against the new
+base.
 
-The heavyweight test drives TWO separate Spark driver processes
-upserting disjoint key ranges into the same table in interleaved
-batches and asserts no row and no bucket dir is lost.
+- a deterministic lost race: a second ``Catalog`` commits between the
+  first writer's stage and its publish;
+- TWO separate Spark driver processes upserting disjoint key ranges
+  into the same table in interleaved batches: no row and no bucket dir
+  is lost;
+- a writer process SIGKILLed after staging: readers keep the previous
+  version, the next writer commits at once, and the dead writer's
+  staged entries are collected by that commit.
 """
 
 import json
 import os
+import selectors
 import subprocess
 import sys
 import time
@@ -95,60 +101,183 @@ def test_two_process_disjoint_upserts(tmp_path, spark):
     assert all(by_id[i] == f"w200_{i}" for i in range(200, 400))
 
 
-def test_lock_blocks_second_writer(tmp_path, spark):
-    """Unit-level: the lock file excludes a second acquirer until
-    release, and a stale lock (presumed-crashed holder) is stolen."""
+def _rows(spark, rows):
+    return spark.createDataFrame(rows, "doc_id string, payload string")
+
+
+def _table_state(cat, name):
+    """(newest manifest, {doc_id: sorted payloads}) of table ``name``;
+    asserts every dir the manifest references exists."""
+    man = cat._newest(name)
+    root = cat._path(name)
+    for dirs in man["buckets"].values():
+        for d in dirs:
+            assert os.path.isdir(os.path.join(root, d)), f"lost dir {d}"
+    got = {}
+    for r in cat.read(name).collect():
+        got.setdefault(r["doc_id"], []).append(r["payload"])
+    return man, {k: sorted(v) for k, v in got.items()}
+
+
+def _overlapping_upserts(cat_a, cat_b, spark):
+    keys = [f"k{i}" for i in range(6)]
+    return (lambda: cat_a.upsert(_rows(spark, [(k, "A") for k in keys]),
+                                 "t"),
+            lambda: cat_b.upsert(_rows(spark, [(k, "B") for k in keys]),
+                                 "t"),
+            # B commits first, A re-runs its upsert on top of B's version
+            {k: ["A"] for k in keys})
+
+
+def _append_vs_upsert(cat_a, cat_b, spark):
+    return (lambda: cat_a.append(_rows(spark, [("k0", "A"), ("n1", "A")]),
+                                 "t"),
+            lambda: cat_b.upsert(_rows(spark, [("k0", "B"), ("k1", "B"),
+                                               ("n2", "B")]), "t"),
+            {"k0": ["A", "B"], "k1": ["B"], "n1": ["A"], "n2": ["B"],
+             **{f"k{i}": ["base"] for i in range(2, 6)}})
+
+
+@pytest.mark.parametrize("race", [_overlapping_upserts, _append_vs_upsert])
+def test_lost_race_rebases_and_retries(tmp_path, spark, monkeypatch, race):
+    """Writer A stages its commit; before A publishes, writer B (a second
+    Catalog on the same warehouse) runs a complete commit of the same
+    generation. A's publish must lose, and A re-runs against B's version:
+    no update of either writer is lost."""
     from mivaa_pdf_extractor_spark.sources.tables_io import Catalog
-    cat = Catalog(spark, str(tmp_path / "wh"), num_buckets=4)
 
-    with cat._table_lock("t"):
-        t0 = time.time()
-        with pytest.raises(TimeoutError):
-            with cat._table_lock("t", timeout=0.3):
-                pass
-        assert time.time() - t0 < 10
-    # released: immediate re-acquire succeeds
-    with cat._table_lock("t", timeout=0.3):
-        pass
+    warehouse = str(tmp_path / "wh")
+    cat_a = Catalog(spark, warehouse, num_buckets=4)
+    cat_b = Catalog(spark, warehouse, num_buckets=4)
+    cat_a.upsert(_rows(spark, [(f"k{i}", "base") for i in range(6)]), "t")
+    write_a, write_b, want = race(cat_a, cat_b, spark)
 
-    # stale steal: backdate the lock past LOCK_STALE_SEC
-    lock = os.path.join(str(tmp_path / "wh"), "t", "_LOCK")
-    with open(lock, "w") as f:
-        f.write("99999")
-    old = time.time() - Catalog.LOCK_STALE_SEC - 5
-    os.utime(lock, (old, old))
-    with cat._table_lock("t", timeout=0.3):
-        pass
+    publish = cat_a._publish
+    outcomes = []
+
+    def publish_after_b(name, manifest, token):
+        if not outcomes:
+            write_b()
+        outcomes.append(publish(name, manifest, token))
+        return outcomes[-1]
+
+    monkeypatch.setattr(cat_a, "_publish", publish_after_b)
+    write_a()
+    assert outcomes == [False, True]  # lost once, then won on B's base
+    man, got = _table_state(cat_a, "t")
+    assert man["version"] == 3
+    assert got == want
 
 
-def test_release_spares_a_thiefs_lock(tmp_path, spark):
-    """Round 6 (ADVICE r5 #1): a holder whose lock was stolen mid-stage
-    must NOT remove the thief's lock on release — release is
-    token-checked."""
+CRASHING_WRITER = """
+import sys, time
+sys.path.insert(0, {repo!r})
+from mivaa_pdf_extractor_spark.session import build_session
+from mivaa_pdf_extractor_spark.sources.tables_io import Catalog
+
+spark = build_session(app_name="dying", master="local[2]",
+                      shuffle_partitions=4)
+spark.sparkContext.setLogLevel("ERROR")
+cat = Catalog(spark, sys.argv[1], num_buckets=4)
+
+
+stage = cat._stage_buckets
+
+
+def hang_after_staging(*args, **kwargs):
+    stage(*args, **kwargs)
+    print("STAGED", flush=True)
+    time.sleep(600)
+
+
+cat._stage_buckets = hang_after_staging
+cat.upsert(spark.createDataFrame([("a", "dead"), ("z", "dead")],
+                                 "doc_id string, payload string"), "t")
+"""
+
+
+@pytest.mark.slow
+def test_sigkilled_writer_blocks_nobody(tmp_path, spark):
+    """A writer process killed between stage and publish: readers still
+    see the previous version, a new writer commits at once, and that
+    commit collects every entry the dead writer staged."""
     from mivaa_pdf_extractor_spark.sources.tables_io import Catalog
-    cat = Catalog(spark, str(tmp_path / "wh"), num_buckets=4)
-    lock = os.path.join(str(tmp_path / "wh"), "t", "_LOCK")
-    with cat._table_lock("t"):
-        # simulate a thief: replace the lock with a foreign token
-        with open(lock, "w") as f:
-            f.write("thief:deadbeef")
-    # the holder's release must have left the thief's lock alone
-    with open(lock) as f:
-        assert f.read() == "thief:deadbeef"
-    os.unlink(lock)
 
-    # and a NORMAL release (token still ours) must clear the lock
-    with cat._table_lock("t"):
-        pass
-    assert not os.path.exists(lock)
+    warehouse = str(tmp_path / "wh")
+    root = os.path.join(warehouse, "t")
+    cat = Catalog(spark, warehouse, num_buckets=4)
+    cat.upsert(_rows(spark, [("a", "v1"), ("b", "v1")]), "t")
+    before = set(os.listdir(root))
 
-    # steal path leaves no grave files behind
-    with open(lock, "w") as f:
-        f.write("crashed:cafe")
-    old = time.time() - Catalog.LOCK_STALE_SEC - 5
-    os.utime(lock, (old, old))
-    with cat._table_lock("t", timeout=0.3):
-        pass
-    leftovers = [p for p in os.listdir(os.path.dirname(lock))
-                 if p.startswith("_LOCK")]
-    assert leftovers == []
+    with open(tmp_path / "writer.err", "w") as err:
+        child = subprocess.Popen(
+            [sys.executable, "-c", CRASHING_WRITER.format(repo=str(REPO)),
+             warehouse],
+            stdout=subprocess.PIPE, stderr=err, cwd=str(REPO))
+    try:
+        sel = selectors.DefaultSelector()
+        sel.register(child.stdout, selectors.EVENT_READ)
+        deadline = time.monotonic() + 300
+        line = b""
+        while b"STAGED" not in line and time.monotonic() < deadline:
+            if child.poll() is not None:
+                break
+            if sel.select(timeout=1.0):
+                line = child.stdout.readline()
+        assert b"STAGED" in line, (
+            "writer never staged: "
+            + (tmp_path / "writer.err").read_text()[-2000:])
+    finally:
+        child.kill()
+        child.wait(timeout=60)
+        child.stdout.close()
+
+    dead = set(os.listdir(root)) - before
+    assert dead, "the killed writer left no staged entries to collect"
+    assert cat.versions("t") == [1]
+    assert {r["doc_id"]: r["payload"] for r in cat.read("t").collect()} \
+        == {"a": "v1", "b": "v1"}
+
+    t0 = time.monotonic()
+    cat.upsert(_rows(spark, [("b", "v2"), ("c", "v2")]), "t")
+    assert time.monotonic() - t0 < 10
+    man, got = _table_state(cat, "t")
+    assert man["version"] == 2
+    assert got == {"a": ["v1"], "b": ["v2"], "c": ["v2"]}
+    assert not [d for d in dead if os.path.exists(os.path.join(root, d))]
+
+
+def test_threaded_writers_lose_no_update(tmp_path, spark):
+    """More writer threads than cores, each with its own Catalog on one
+    table, commit interleaved upserts through the shared session: every
+    commit lands exactly once (version == commits) and every row of
+    every writer is present."""
+    import threading
+
+    from mivaa_pdf_extractor_spark.sources.tables_io import Catalog
+
+    warehouse = str(tmp_path / "wh")
+    writers, batches = (os.cpu_count() or 4) + 2, 2
+    errors = []
+
+    def write(w):
+        try:
+            cat = Catalog(spark, warehouse, num_buckets=4)
+            for i in range(batches):
+                cat.upsert(_rows(spark, [(f"w{w}-{i}-{j}", f"w{w}")
+                                         for j in range(5)]), "t")
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=write, args=(w,))
+               for w in range(writers)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    man, got = _table_state(Catalog(spark, warehouse, num_buckets=4), "t")
+    assert man["version"] == writers * batches
+    assert got == {f"w{w}-{i}-{j}": [f"w{w}"] for w in range(writers)
+                   for i in range(batches) for j in range(5)}

@@ -118,3 +118,31 @@ def test_budget_sequential_in_reading_order(spark):
                              expand_n=1).collect()[0]
     assert r.neighbors_added == 1
     assert r.expanded_chunk_indexes == "1"
+
+
+def test_duplicate_hit_keeps_each_neighbour_once(spark):
+    # the same hit twice in the hits frame yields two identical rows,
+    # each holding every kept neighbour once — the DuckDB twin's result
+    # for the hit, repeated
+    import duckdb
+
+    corpus = [(1, 1, 1, 1, "before"), (2, 1, 1, 3, "after"),
+              (100, 1, 1, 2, "HIT")]
+    hit = [_hit(100, 1, 1, 2, "HIT")]
+    rows = ke.expand_chunk_hits(_hits(spark, hit * 2),
+                                _chunks(spark, corpus),
+                                expand_n=1).collect()
+    assert len(rows) == 2 and rows[0] == rows[1]
+    assert rows[0].content == "before\n\nHIT\n\nafter"
+    assert rows[0].neighbors_added == 2
+
+    sql = ke.expand_sql(expand_n=1)
+    for synth, table in ((ke.SYNTH_KB_HITS_SQL, "hits_t"),
+                         (ke.SYNTH_KB_CORPUS_SQL, "corpus_t")):
+        assert synth in sql
+        sql = sql.replace(synth, f"SELECT * FROM {table}")
+    con = duckdb.connect()
+    con.register("hits_t", _hits(spark, hit).toPandas())
+    con.register("corpus_t", _chunks(spark, corpus).toPandas())
+    twin = con.execute(sql).fetchall()
+    assert [tuple(r) for r in rows] == twin * 2

@@ -96,9 +96,12 @@ def test_catalog_upsert(spark, tmp_path):
     # bucketed-manifest mechanics: the second upsert rewrote ONLY the
     # buckets 'b' and 'c' hash into — any bucket holding only 'a' still
     # points at its generation-1 dir (no full-table rewrite, round-3
-    # verdict item 2), and the manifest swap is atomic (os.replace)
+    # verdict item 2). Dir names carry a per-attempt token after the
+    # generation, so compare parsed generations
     import json
     import os
+
+    from mivaa_pdf_extractor_spark.sources.tables_io import _generation
     root = str(tmp_path / "upsert" / "t")
     with open(os.path.join(root, "_MANIFEST")) as f:
         m = json.load(f)
@@ -109,20 +112,20 @@ def test_catalog_upsert(spark, tmp_path):
         "doc_id", F.pmod(F.hash("doc_id"), F.lit(cat.num_buckets))
         .alias("b")).collect()}
     if bucket_of["a"] not in {bucket_of["b"], bucket_of["c"]}:
-        assert m["buckets"][str(bucket_of["a"])] == [f"b{bucket_of['a']}_g1"]
-    assert m["buckets"][str(bucket_of["b"])][0].endswith("_g2")
+        dirs_a = m["buckets"][str(bucket_of["a"])]
+        assert [_generation(d) for d in dirs_a] == [1]
+        assert dirs_a[0].startswith(f"b{bucket_of['a']}_g1_")
+    assert _generation(m["buckets"][str(bucket_of["b"])][0]) == 2
     df3 = spark.createDataFrame([("d", 3)], "doc_id string, v int")
     cat.upsert(df3, "t")
     assert len({r["doc_id"] for r in cat.read("t").collect()}) == 4
     # GC: dirs referenced by NO retained generation are gone. Retained =
-    # current + previous + the last `snapshot_retention` time-travel
-    # snapshots (_MANIFEST.v<N>, round 5) — their dirs stay pinned so
-    # read(name, version=N) keeps working.
+    # the last `snapshot_retention` time-travel snapshots
+    # (_MANIFEST.v<N>, round 5), never fewer than current + previous —
+    # their dirs stay pinned so read(name, version=N) keeps working.
     live = set()
     for fn in os.listdir(root):
-        if fn == "_MANIFEST" or fn == "_MANIFEST.prev" \
-                or (fn.startswith("_MANIFEST.v")
-                    and not fn.endswith(".tmp")):
+        if fn == "_MANIFEST" or fn.startswith("_MANIFEST.v"):
             with open(os.path.join(root, fn)) as f:
                 live |= {d for dl in json.load(f)["buckets"].values()
                          for d in dl}
@@ -162,28 +165,19 @@ def test_catalog_touched_bucket_rewrite_cost(spark, tmp_path):
     assert got["doc-7"] == 999 and got["doc-0"] == 0 and len(got) == 200
 
 
-def test_catalog_legacy_migration_and_schema_evolution(spark, tmp_path):
-    """ADVICE r3: first bucketed write over a plain append-log table folds
-    the old rows in and removes the orphaned root part files; upserting a
-    WIDER schema evolves (old rows surface null for the new column)."""
-    import os
-
+def test_catalog_schema_evolution(spark, tmp_path):
+    """Upserting a WIDER schema evolves the table: old rows surface null
+    for the new column."""
     from mivaa_pdf_extractor_spark.sources.tables_io import Catalog
 
-    wh = str(tmp_path / "legacy")
-    old = spark.createDataFrame([("a", 1), ("b", 1)], "doc_id string, v int")
-    # simulate the pre-manifest append-log layout: root-level part files
-    old.write.mode("append").parquet(os.path.join(wh, "t"))
-    cat = Catalog(spark, wh)
-    assert cat.exists("t")
+    cat = Catalog(spark, str(tmp_path / "evolve"))
+    cat.upsert(spark.createDataFrame([("a", 1), ("b", 1)],
+                                     "doc_id string, v int"), "t")
     wider = spark.createDataFrame([("b", 2, "x"), ("c", 2, "y")],
                                   "doc_id string, v int, extra string")
     cat.upsert(wider, "t")
     got = {r["doc_id"]: (r["v"], r["extra"]) for r in cat.read("t").collect()}
     assert got == {"a": (1, None), "b": (2, "x"), "c": (2, "y")}
-    root = os.path.join(wh, "t")
-    assert not any(f.endswith(".parquet") for f in os.listdir(root)
-                   if os.path.isfile(os.path.join(root, f)))
 
 
 def test_replace_namespace_explicit_delete_keys(spark, tmp_path):
@@ -294,9 +288,11 @@ def test_catalog_num_buckets_mismatch_is_safe(spark, tmp_path):
 
 
 def test_catalog_orphan_dirs_are_gcd_and_reads_unaffected(spark, tmp_path):
-    """Crash between bucket staging and the manifest swap leaves orphan
-    b*-dirs: readers never see them (reads go through the manifest), and
-    the next successful swap garbage-collects them."""
+    """Crash between bucket staging and the manifest publish leaves
+    orphan b*-dirs of the generation it targeted: readers never see them
+    (reads go through the manifest), and the next successful commit
+    garbage-collects them. A dir of a generation above the newest version
+    may belong to a live writer and survives."""
     import os
 
     from mivaa_pdf_extractor_spark.sources.tables_io import Catalog
@@ -305,15 +301,20 @@ def test_catalog_orphan_dirs_are_gcd_and_reads_unaffected(spark, tmp_path):
     df = spark.createDataFrame([("a", 1), ("b", 1)], "doc_id string, v int")
     cat.upsert(df, "t")
     root = str(tmp_path / "crash" / "t")
-    # simulate a crashed writer: orphan bucket dir with bogus data
-    orphan = os.path.join(root, "b0_g99")
-    spark.createDataFrame([("zzz", 99)], "doc_id string, v int") \
-        .write.parquet(orphan)
+    # simulate a crashed writer at the generation the next commit
+    # publishes, and a live one two generations ahead
+    orphan = os.path.join(root, "b0_g2_deadbeef")
+    ahead = os.path.join(root, "b0_g3_0ddba11")
+    for d in (orphan, ahead):
+        spark.createDataFrame([("zzz", 99)], "doc_id string, v int") \
+            .write.parquet(d)
     got = {r["doc_id"] for r in cat.read("t").collect()}
-    assert got == {"a", "b"}  # orphan invisible to readers
+    assert got == {"a", "b"}  # orphans invisible to readers
     cat.upsert(spark.createDataFrame([("c", 2)], "doc_id string, v int"),
                "t")
-    assert not os.path.isdir(orphan)  # GC'd by the next swap
+    assert cat.versions("t")[-1] == 2
+    assert not os.path.isdir(orphan)  # GC'd by the next commit
+    assert os.path.isdir(ahead)       # above the newest version: kept
     assert {r["doc_id"] for r in cat.read("t").collect()} == {"a", "b", "c"}
 
 
@@ -393,42 +394,6 @@ def test_catalog_same_gen_orphan_collision(spark, tmp_path):
                "t")
     got = {r["doc_id"]: r["v"] for r in cat.read("t").collect()}
     assert got == {"a": 1, "b": 1, "c": 2}  # no wedge, no phantom "zz"
-
-
-def test_catalog_legacy_scrub_only_after_manifest_publish(
-        spark, tmp_path, monkeypatch):
-    """Migrating a legacy table must not destroy its only copy: if the
-    manifest publish itself dies, the legacy files are still on disk and
-    readable, and the retry completes the migration."""
-    import os
-
-    from mivaa_pdf_extractor_spark.sources.tables_io import Catalog
-
-    wh = str(tmp_path / "migcrash")
-    old = spark.createDataFrame([("a", 1), ("b", 1)], "doc_id string, v int")
-    old.write.mode("append").parquet(os.path.join(wh, "t"))
-    cat = Catalog(spark, wh)
-
-    import pytest
-
-    def dying_swap(name, manifest):
-        raise RuntimeError("simulated crash during manifest swap")
-
-    monkeypatch.setattr(cat, "_swap_manifest", dying_swap)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        cat.upsert(spark.createDataFrame([("c", 2)],
-                                         "doc_id string, v int"), "t")
-    monkeypatch.undo()
-    # legacy data survived the crash and is still served
-    assert {r["doc_id"] for r in cat.read("t").collect()} == {"a", "b"}
-    # retry completes: rows merged, legacy root part files scrubbed
-    cat.upsert(spark.createDataFrame([("c", 2)], "doc_id string, v int"),
-               "t")
-    got = {r["doc_id"]: r["v"] for r in cat.read("t").collect()}
-    assert got == {"a": 1, "b": 1, "c": 2}
-    root = os.path.join(wh, "t")
-    assert not any(f.endswith(".parquet") for f in os.listdir(root)
-                   if os.path.isfile(os.path.join(root, f)))
 
 
 def test_replace_namespace_delete_keys_missing_df_key(spark, tmp_path):
